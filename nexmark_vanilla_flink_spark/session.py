@@ -126,19 +126,33 @@ def get_session(
         .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
     )
     if master.startswith("local"):
-        # local-mode I/O: skip Hadoop's .crc sidecar files for file:// —
-        # every streaming WAL/offset/commit write otherwise pays a second
-        # ChecksumFileSystem write (FileSystem API) / ChecksumFs write
-        # (FileContext API, what CheckpointFileManager uses). Measured on
-        # the bounded-replay floor: 0.59 -> 0.38 s. Irrelevant on a real
-        # cluster (checkpoints live on HDFS/S3, not file://), so gated on
-        # a local master; parquet carries its own page checksums either way.
+        # local-mode I/O, irrelevant on a real cluster (checkpoints live on
+        # HDFS/S3, not file://), so gated on a local master:
+        # - RawLocalFileSystem skips Hadoop's .crc sidecar files for file://
+        #   — every write otherwise pays a second ChecksumFileSystem write.
+        #   Measured on the bounded-replay floor: 0.59 -> 0.38 s; parquet
+        #   carries its own page checksums either way.
+        # - Checkpoints go through the FileSystem API, not Spark's default
+        #   FileContext manager. This pyspark ships without libhadoop
+        #   (NativeIO unavailable), so Hadoop's local file ops fall back to
+        #   shell commands: under FileContext each rename runs `readlink`
+        #   on source and destination and each create runs `chmod` — 10
+        #   process spawns and ~22 ms per checkpoint file, ~197 spawns per
+        #   q5 micro-batch (4-core VM). FileSystem.create +
+        #   RawLocalFileSystem.rename (a plain rename(2)) costs 2 spawns and
+        #   ~7 ms per file, ~45 per batch; summed state commit time per q5
+        #   batch fell ~340 -> ~35 ms. Offset/commit logs keep their
+        #   no-overwrite check (both managers stat the destination before
+        #   renaming on a local fs), and Spark's ChecksumCheckpointFileManager
+        #   wraps either manager, so checkpoint checksum files are still
+        #   written and verified.
         builder = builder.config(
             "spark.hadoop.fs.file.impl",
             "org.apache.hadoop.fs.RawLocalFileSystem",
         ).config(
-            "spark.hadoop.fs.AbstractFileSystem.file.impl",
-            "org.apache.hadoop.fs.local.RawLocalFs",
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
         )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)

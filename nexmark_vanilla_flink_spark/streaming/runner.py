@@ -14,8 +14,10 @@ import shutil
 import tempfile
 import time
 import uuid
+import warnings
 import weakref
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -136,32 +138,46 @@ def _discard_ephemeral_dir(path: str, spark=None) -> None:
     into the checkpoint's state/ tree, silently recreating the dir we
     just deleted (the tests_ok=false flake in VERIFY_r12). Fix, in order:
 
-    1. ``StateStore.stop()`` (the hook Spark's own StreamTest suite uses
-       between tests): synchronously unloads every provider and stops the
-       maintenance task, so nothing can write into the dir afterwards.
-       Providers for a discarded ephemeral checkpoint are garbage anyway —
-       every replay gets a fresh checkpoint path, so no provider is ever
-       reused — and the maintenance task restarts lazily on the next
-       stateful query's first StateStore.get().
-    2. rmtree, then a bounded verify-retry: if an in-flight write won the
-       interleave and the dir survived/reappeared, re-delete. The loop
-       exits immediately on the (normal) first success — zero added
-       latency on the timed replay path.
+    1. ``StateStore.unloadAll()``, only while no streaming query is
+       active: closes and forgets every loaded provider, so the periodic
+       maintenance task has nothing left to write into the dir. Providers
+       for a discarded ephemeral checkpoint are garbage anyway — every
+       replay gets a fresh checkpoint path, so no provider is ever reused.
+       Not ``StateStore.stop()``: in Spark 4.1 it holds the
+       ``loadedProviders`` monitor while waiting for the maintenance pool,
+       and a maintenance worker that needs that same monitor (to unload a
+       provider or reach the coordinator) blocks, so stop() could hang
+       until maintenanceShutdownTimeout (300 s).
+       unloadAll() never waits on the pool, and skipping it while a query
+       runs leaves that query's state stores loaded.
+    2. rmtree, then a bounded verify-retry: a maintenance write already
+       in flight when the providers were unloaded can recreate the tree
+       (FileSystem.create makes missing parents), so re-delete until it
+       stays gone. The loop exits immediately on the (normal) first
+       success — zero added latency on the timed replay path. A path that
+       still survives is reported and stays registered for atexit.
     """
-    if spark is not None:
+    if spark is not None and not spark.streams.active:
         try:
-            jvm_ss = (
-                spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore
-            )
-            jvm_ss.stop()
-        except Exception:
-            pass  # cleanup is best-effort; atexit still backstops
+            # unloadAll is private[sql]: no static forwarder, call the
+            # companion object directly
+            pkg = spark._jvm.org.apache.spark.sql.execution.streaming.state
+            getattr(getattr(pkg, "StateStore$"), "MODULE$").unloadAll()
+        except Py4JError as exc:  # cleanup is best-effort; retry + atexit
+            warnings.warn(f"StateStore.unloadAll failed: {exc}", RuntimeWarning)
     shutil.rmtree(path, ignore_errors=True)
     for _ in range(20):
         if not os.path.isdir(path):
             break
         time.sleep(0.05)
         shutil.rmtree(path, ignore_errors=True)
+    if os.path.isdir(path):
+        # still registered (track_ephemeral_dir), so atexit retries it
+        warnings.warn(
+            f"ephemeral checkpoint {path} survived removal; retried at exit",
+            RuntimeWarning,
+        )
+        return
     try:
         _EPHEMERAL_DIRS.remove(path)
     except ValueError:

@@ -1,6 +1,7 @@
 """Streaming time-semantics tests: processing-time flush (A3/Q5b) on a live
 unbounded stream, and watermark-driven late-data dropping (§2.6)."""
 
+import os
 import tempfile
 import time
 
@@ -177,3 +178,43 @@ def test_hashed_replay_matches_sink_replay_content(spark, sf_dir):
     ).collect()[0]
     assert n == want["n"] > 0
     assert h == want["h"]
+
+
+def test_local_checkpoints_use_filesystem_manager(spark, tmp_path):
+    """Local masters write checkpoints through Hadoop's FileSystem API, not
+    the FileContext default (whose shell-command fallback spawns ~5x more
+    processes per checkpoint file). Pins the class name, so a pyspark
+    upgrade that moves it fails here instead of at every query start, and
+    pins that Spark's own checkpoint checksums stay on while Hadoop's
+    ``.<name>.crc`` sidecars stay off."""
+    from nexmark_vanilla_flink_spark.streaming.runner import run_available_now
+    from tests.test_ephemeral_cleanup import _toy_stream
+
+    jvm = spark._jvm
+    pkg = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = pkg.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path / "probe")),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+    ckpt = tmp_path / "ckpt"
+    out = run_available_now(
+        _toy_stream(spark, tmp_path),
+        "append",
+        checkpoint_dir=str(ckpt),
+        shuffle_partitions=1,
+    )
+    assert out.count() > 0
+    state_files = set(os.listdir(ckpt / "state" / "0" / "0"))
+    assert {"1.delta", "1.delta.crc"} <= state_files
+    hadoop_crc = [
+        f
+        for _, _, files in os.walk(ckpt)
+        for f in files
+        if f.startswith(".") and f.endswith(".crc")
+    ]
+    assert hadoop_crc == []
