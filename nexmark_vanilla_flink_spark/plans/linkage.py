@@ -841,16 +841,16 @@ def funnel_conversion_stream_replay(
     into hash buckets of user_id, one row per matched user at the flush
     horizon — emission timing is unobservable under the batch oracle, and
     the per-key Python group-call machinery was the replay's dominant
-    cost. The PER-KEY-TIMER replica (funnel_stateful(per_key_timers=True)
-    — the reference's timer-per-auction pattern, NexmarkQueryX.java:465:
-    each key emits and frees its state the moment the watermark proves
-    its row immutable) remains the continuous deployment form, with its
-    incremental pre-horizon emission pinned live by
-    tests/test_continuous_cep.py and its row-set parity with this twin
-    pinned by tests/test_bucketed_stateful.py. The one-row flush sentinel
-    (ts = max event time + 8 days, the bounded-replay analog of Flink's
-    end-of-input watermark) settles the open-ended keys, which is what
-    lets this replay share the batch funnel oracle verbatim.
+    cost. The per-key-timer operator (streaming/stateful.py::
+    funnel_stateful — the reference's timer-per-auction pattern,
+    NexmarkQueryX.java:465: each key emits and frees its state the moment
+    the watermark proves its row immutable) is the continuous deployment
+    form, with its incremental pre-horizon emission and its equality with
+    the batch funnel pinned live by tests/test_continuous_cep.py. The
+    one-row flush sentinel (ts = max event time + 8 days, the
+    bounded-replay analog of Flink's end-of-input watermark) settles the
+    open-ended keys, which is what lets this replay share the batch
+    funnel oracle verbatim.
 
     Scale: matched state is three BIGINTs per user plus a pending buffer
     bounded by the watermark lag, hash-partitioned on user_id (bucket
@@ -873,10 +873,9 @@ def funnel_conversion_stream_replay(
     )
     out = run_available_now(
         # bucketed state (r9): identical funnel_fold, one row per matched
-        # user at the flush horizon — per-key parity pinned by
-        # tests/test_bucketed_stateful.py. The per-key-timer replica
-        # (funnel_stateful(per_key_timers=True)) remains the continuous
-        # deployment form, exercised live by tests/test_continuous_cep.py.
+        # user at the flush horizon, under the batch funnel oracle. The
+        # per-key-timer funnel_stateful is the continuous deployment
+        # form, exercised live by tests/test_continuous_cep.py.
         funnel_stateful_bucketed(stream, flush_ms, _FUNNEL_WINDOW_US),
         output_mode="append",
         # the sentinel end-of-input fast path flushes in the data batch
@@ -913,12 +912,11 @@ def scd2_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: durable state is one (state, from, version) triple per key
     plus the watermark-lag-bounded pending buffer, coarsened into hash
     buckets (streaming/stateful.py::bucketed_stateful, r9: the per-key
-    Python replica paid ~2 s of per-key group-call machinery at sf0.1;
-    per-key parity pinned by tests/test_bucketed_stateful.py, and the
-    per-key replica `scd2_stateful` remains the reference form);
-    everything keys on user_id. The flush sentinel is the bounded-replay
-    analog of Flink's end-of-input watermark (shared helper with the
-    funnel twin)."""
+    Python form paid ~2 s of per-key group-call machinery at sf0.1;
+    incremental closed-interval emission is pinned live by
+    tests/test_continuous_cep.py); everything keys on user_id. The flush
+    sentinel is the bounded-replay analog of Flink's end-of-input
+    watermark (shared helper with the funnel twin)."""
 
     from ..streaming.runner import run_available_now
     from ..streaming.stateful import scd2_stateful_bucketed

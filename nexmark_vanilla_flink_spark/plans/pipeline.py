@@ -1541,6 +1541,63 @@ def _normed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Byte budget of one IVF coarse-score block. The (rows x centroids) score
+# matrix grows with the codebook, which the driver-codebook cap bounds only
+# as a collect; chunking the centroid axis keeps every per-chunk array (the
+# dot accumulator, its product buffer, each output column) within this
+# many bytes at any codebook size.
+_IVF_SCORE_BLOCK_BYTES = 8 << 20
+
+
+def _ivf_score_kernel(C, CN, CID, block_bytes=_IVF_SCORE_BLOCK_BYTES):
+    """The ``mapInPandas`` function of the IVF coarse assignment: raw
+    cosines of each (vec_id, v, nrm) batch against the driver-collected
+    codebook (rows of ``C`` in ``CID`` order, norms ``CN``), as
+    (vec_id, c_id, cs_raw) frames — one frame per chunk of centroids, the
+    chunk sized so a (rows x chunk) float64 array fits ``block_bytes``.
+    Each score accumulates its dot product per DIMENSION in ascending
+    order — the same operation sequence per element as the sequential
+    fold of the distributed branch, so scores are bit-identical whatever
+    the chunking.
+
+    Returns a closure rather than being the function itself: Spark
+    pickles a closure by value, while a module-level function is pickled
+    by reference, and the Python workers can import this package only
+    when the driver runs from the repository root."""
+
+    def score_frames(pdfs):
+        import numpy as np
+        import pandas as pd
+
+        S = len(CID)
+        for pdf in pdfs:
+            n_ = len(pdf)
+            if not n_:
+                continue
+            V = np.vstack(pdf["v"].to_numpy())
+            nrm = pdf["nrm"].to_numpy()
+            vid = pdf["vec_id"].to_numpy().astype("int64")
+            w = max(1, block_bytes // (8 * n_))
+            for s0 in range(0, S, w):
+                s1 = min(S, s0 + w)
+                dot = np.zeros((n_, s1 - s0))
+                tmp = np.empty_like(dot)
+                for i in range(V.shape[1]):  # ascending dims == fold order
+                    np.multiply(V[:, i, None], C[None, s0:s1, i], out=tmp)
+                    np.add(dot, tmp, out=dot)
+                np.multiply(nrm[:, None], CN[None, s0:s1], out=tmp)
+                np.divide(dot, tmp, out=dot)
+                yield pd.DataFrame(
+                    {
+                        "vec_id": np.repeat(vid, s1 - s0),
+                        "c_id": np.tile(CID[s0:s1], n_),
+                        "cs_raw": dot.reshape(-1),
+                    }
+                )
+
+    return score_frames
+
+
 @register_artifact("ivf_index")
 def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the IVF index ONCE per embeddings state — the offline
@@ -1600,34 +1657,10 @@ def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
             C = np.vstack([np.asarray(r["cv"]) for r in crows])
             CN = np.array([r["cnrm"] for r in crows])
             CID = np.array([r["c_id"] for r in crows], dtype=np.int64)
-            S = len(CID)
-
-            def _scores(it):
-                import pandas as pd
-
-                for pdf in it:
-                    n_ = len(pdf)
-                    if not n_:
-                        continue
-                    V = np.vstack(pdf["v"].to_numpy())
-                    dot = np.zeros((n_, S))
-                    for i in range(V.shape[1]):  # ascending dims == fold order
-                        dot = dot + V[:, i][:, None] * C[:, i][None, :]
-                    cs_raw = dot / (
-                        pdf["nrm"].to_numpy()[:, None] * CN[None, :]
-                    )
-                    yield pd.DataFrame(
-                        {
-                            "vec_id": np.repeat(
-                                pdf["vec_id"].to_numpy(), S
-                            ).astype("int64"),
-                            "c_id": np.tile(CID, n_),
-                            "cs_raw": cs_raw.reshape(-1),
-                        }
-                    )
 
             ac = n.select("vec_id", "v", "nrm").mapInPandas(
-                _scores, "vec_id long, c_id long, cs_raw double"
+                _ivf_score_kernel(C, CN, CID),
+                "vec_id long, c_id long, cs_raw double",
             ).select(
                 "vec_id", "c_id", F.round(F.col("cs_raw"), 6).alias("cs")
             )

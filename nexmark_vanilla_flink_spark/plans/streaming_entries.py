@@ -75,11 +75,10 @@ def q8_union_join_lowlevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     person, ValueState/ListState symmetric emission —
     NexmarkQuery8.java:570-662) on applyInPandasWithState, replayed bounded.
     Emission order differs from batch; the row SET is deterministic and the
-    oracle checks it. This bounded entry runs the BUCKETED twin (r11 —
-    identical per-user symmetric emission, state coarsened into hash
-    buckets; the per-key replica ``union_join_stateful`` remains the
-    reference form, under the batch-join gate via tests/test_stateful.py
-    and set-parity-pinned by tests/test_bucketed_stateful.py)."""
+    oracle checks it. State is coarsened into hash buckets of user_id
+    (r11 — per-user symmetric emission, one Python group call per bucket
+    instead of per key); tests/test_bucketed_stateful.py runs it with
+    several users per bucket against the same oracle."""
     from pyspark.sql import functions as F
 
     from ..streaming.runner import run_available_now
@@ -88,8 +87,8 @@ def q8_union_join_lowlevel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ONE source scan (r11): persons and auctions are event-type slices of
     # the same events file — the pre-split form ran two file-stream sources
-    # that each re-scanned it. The tagged rows are identical to
-    # tagged_union(persons, auctions) (side 1 = person, 2 = auction).
+    # that each re-scanned it. The tagged rows are Input1Tagger/
+    # Input2Tagger's union (side 1 = person, 2 = auction).
     ev = stream_events(spark, sf_dir)
     tagged = ev.filter(F.col("event_type").isin("signup", "view")).select(
         F.when(F.col("event_type") == "signup", 1)

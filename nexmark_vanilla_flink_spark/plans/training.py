@@ -497,9 +497,8 @@ def skipgram_pairs_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         # counted bucketed twin (r11): same fold, pairs pre-counted at
         # the operator boundary (the event-type vocabulary collapses
         # ~400 K raw pairs to <=25 distinct rows per bucket — map-side
-        # combine where the data is); count parity with the raw bucketed
-        # twin AND the per-key replica `skipgram_stateful` pinned by
-        # tests/test_bucketed_stateful.py
+        # combine where the data is); the pair counts sit under this
+        # entry's DuckDB oracle
         skipgram_stateful_counted(stream, flush_ms),
         output_mode="append",
         # the sentinel end-of-input fast path flushes in the data batch

@@ -1,22 +1,26 @@
-"""Low-level stateful replicas (SURVEY.md §7 step 8) — the places where the
+"""Low-level stateful operators (SURVEY.md §7 step 8) — the places where the
 reference's semantics are *timer-driven* rather than declarative, implemented
 on ``applyInPandasWithState`` (Arrow-batched keyed state, the Spark analog of
 Flink's KeyedProcessFunction + ValueState/ListState/MapState surface,
-§2.6).
+§2.6). One implementation per operator:
 
-Default builds use the declarative plans (plans/nexmark.py, streaming/
-queries.py); these replicas exist for exact-behavior parity:
-
-  * hot_items_stateful  — Q5's Aggregator (NexmarkQuery5.java:201-251):
-    per-key accumulator {max, count, last ts} with an event-time timer that
-    fires when the watermark passes the window end, emits, and clears —
-    reference's registerEventTimeTimer(:240) + onTimer(:246-250).
-  * union_join_stateful — Q8/Q11's JoinUDF (NexmarkQuery8.java:602-662):
-    tagged-union stream keyed by personId, ValueState<person> +
-    ListState<auction> (never evicted — reference behavior, :634), emitting
-    matches incrementally from both sides (a symmetric hash join by hand).
+  * union_join_stateful_bucketed — Q8/Q11's JoinUDF
+    (NexmarkQuery8.java:602-662): a tagged-union stream keyed by user
+    whose person and auction buffers are never evicted (reference
+    behavior, :634), emitting matches incrementally from both sides (a
+    symmetric hash join by hand); registry entry
+    ``q8_union_join_lowlevel``.
+  * allowed_lateness_stateful — Flink allowedLateness re-firing
+    (NexmarkQueryX.java:279-281); registry entry
+    ``qx_allowed_lateness_replay``.
   * q5b_proc_time_flush — Q5b's processing-time timer flush
     (NexmarkQuery5b.java:204, now + 10 s): ProcessingTimeTimeout variant.
+  * funnel_stateful — the continuous CEP matcher with per-key event-time
+    timers (the timer-per-auction pattern, NexmarkQueryX.java:465): each
+    key emits once its row provably cannot change and leaves a tombstone.
+  * bucketed_stateful and its ewma/scd2/funnel/skipgram folds — keyed
+    replays with state coarsened into hash buckets of user_id; the
+    registry's replay entries run these under the DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -59,72 +63,6 @@ _HOT_ITEMS_STATE = StructType(
 )
 
 
-def hot_items_stateful(bids: DataFrame, window_s: int = 3600) -> DataFrame:
-    """Q5 exact replica: keyed accumulator + event-time timer emission.
-
-    Key = (item, window start); the state carries {max, count, last_ts}; the
-    timeout is the window end so emission happens exactly when the watermark
-    passes it (then the key's state is removed — reference :246-250).
-    """
-
-    def fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        auction_id, w_start_s = (int(v) for v in key)
-        if state.hasTimedOut:
-            max_bid, bid_count, last_ts_ns, _ = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "auction_id": [auction_id],
-                    "w_start_s": [w_start_s],
-                    "max_bid": [max_bid],
-                    "bid_count": [bid_count],
-                    "last_bid_ts_s": [last_ts_ns // 1_000_000_000],
-                }
-            )
-            return
-        max_bid, bid_count, last_ts_ns = float("-inf"), 0, 0
-        if state.exists:
-            max_bid, bid_count, last_ts_ns, _ = state.get
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            max_bid = max(max_bid, float(pdf["bid"].max()))
-            bid_count += int(len(pdf))
-            last_ts_ns = max(last_ts_ns, int(pdf["b_ts_ns"].max()))
-        w_end_ms = (w_start_s + window_s) * 1000
-        state.update((max_bid, bid_count, last_ts_ns, w_end_ms))
-        # the reference's registerEventTimeTimer: fire when watermark ≥ window
-        # end (clamped above the current watermark — historical replay can
-        # have windows that already expired, like the reference's
-        # absolute-timer quirk at NexmarkQuery5.java:240)
-        state.setTimeoutTimestamp(max(w_end_ms, state.getCurrentWatermarkMs() + 1))
-        return
-        yield  # pragma: no cover — generator form
-
-    keyed = (
-        bids.withColumn("auction_id", F.col("item_id"))
-        .withColumn(
-            "w_start_s",
-            F.expr(
-                f"CAST(b_ts_ns DIV {window_s * 1_000_000_000} AS BIGINT) * {window_s}"
-            ),
-        )
-        .withWatermark("b_ts", "2 seconds")
-        .groupBy("auction_id", "w_start_s")
-    )
-    return keyed.applyInPandasWithState(
-        fn,
-        outputStructType=HOT_ITEMS_OUTPUT,
-        stateStructType=_HOT_ITEMS_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
 UNION_JOIN_OUTPUT = StructType(
     [
         StructField("user_id", LongType()),
@@ -133,126 +71,23 @@ UNION_JOIN_OUTPUT = StructType(
     ]
 )
 
-_UNION_JOIN_STATE = StructType(
-    [
-        StructField("person_ids", ArrayType(LongType())),
-        StructField("auction_ids", ArrayType(LongType())),
-    ]
-)
-
-
-def tagged_union(persons: DataFrame, auctions: DataFrame) -> DataFrame:
-    """Input1Tagger/Input2Tagger + union (P3/J6 — JoinHelper.java:24-40):
-    one stream, ``side`` 1 = person, 2 = auction."""
-    p = persons.select(
-        F.lit(1).alias("side"),
-        F.col("user_id"),
-        F.col("person_id").alias("row_id"),
-        F.col("p_ts").alias("ts"),
-    )
-    a = auctions.select(
-        F.lit(2).alias("side"),
-        F.col("seller_id").alias("user_id"),
-        F.col("auction_id").alias("row_id"),
-        F.col("start_ts").alias("ts"),
-    )
-    return p.unionByName(a)
-
-
-def union_join_stateful(persons: DataFrame, auctions: DataFrame) -> DataFrame:
-    """Q8/Q11 JoinUDF replica on two pre-split streams — convenience form
-    of ``union_join_stateful_tagged`` (the API twin of the reference's
-    two-input wiring, NexmarkQuery8.java:570)."""
-    return union_join_stateful_tagged(tagged_union(persons, auctions))
-
-
-def union_join_stateful_tagged(tagged: DataFrame) -> DataFrame:
-    """Q8/Q11 JoinUDF replica: symmetric hash join by hand on the tagged
-    union. Arriving persons join all buffered auctions; arriving auctions
-    join all buffered persons. State is never evicted — faithfully mirroring
-    the reference's never-cleared ListState (NexmarkQuery8.java:634); the
-    production path (streaming/queries.py) bounds state with watermarks
-    instead. Takes the tagged stream directly (side 1 = person,
-    2 = auction — JoinHelper.java:24-40) so a caller that derives both
-    sides from ONE physical source can feed a single scan instead of two
-    (the replay entry: persons and auctions are event-type slices of the
-    same events file, and two separate file-stream sources each re-scan
-    it)."""
-
-    def fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        user_id = int(key[0])
-        persons_buf: list[int] = []
-        auctions_buf: list[int] = []
-        if state.exists:
-            p0, a0 = state.get
-            persons_buf = list(p0)
-            auctions_buf = list(a0)
-        chunks = []
-        for pdf in pdfs:
-            side = pdf["side"].to_numpy()
-            rid = pdf["row_id"].to_numpy()
-            new_p, new_a = rid[side == 1], rid[side == 2]
-            old_p = np.asarray(persons_buf, dtype=np.int64)
-            old_a = np.asarray(auctions_buf, dtype=np.int64)
-            # each (p, a) pair is emitted exactly once, when its later side
-            # arrives: new persons pair with all auctions seen so far (old +
-            # this batch), old persons pair with this batch's new auctions
-            all_a = np.concatenate([old_a, new_a])
-            if len(new_p) and len(all_a):
-                chunks.append(
-                    (np.repeat(new_p, len(all_a)), np.tile(all_a, len(new_p)))
-                )
-            if len(old_p) and len(new_a):
-                chunks.append(
-                    (np.repeat(old_p, len(new_a)), np.tile(new_a, len(old_p)))
-                )
-            persons_buf.extend(int(x) for x in new_p)
-            auctions_buf.extend(int(x) for x in new_a)
-        state.update((persons_buf, auctions_buf))
-        if chunks:
-            out_p = np.concatenate([c[0] for c in chunks])
-            out_a = np.concatenate([c[1] for c in chunks])
-            yield pd.DataFrame(
-                {
-                    "user_id": np.full(len(out_p), user_id, dtype=np.int64),
-                    "person_id": out_p,
-                    "auction_id": out_a,
-                }
-            )
-
-    return (
-        tagged.groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=UNION_JOIN_OUTPUT,
-            stateStructType=_UNION_JOIN_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
 
 def union_join_stateful_bucketed(
     tagged: DataFrame, n_buckets: int = 16
 ) -> DataFrame:
-    """Bucketed twin of ``union_join_stateful_tagged`` — the identical
-    symmetric-hash-join-by-hand emission per user (each (person, auction)
-    pair exactly once, when its later side arrives; buffers never evicted,
-    mirroring the reference's never-cleared ListState,
-    NexmarkQuery8.java:634), with state coarsened into hash buckets of
-    user_id — the same per-key-machinery amortization the other bucketed
-    twins use (r11: the per-key replica pays ~0.7 ms of Arrow group-call
-    protocol per key per batch — a measured ~1.2 s of pure machinery for
-    1500 keys at sf0.1 with a trivial fn). Row-SET parity with the
-    per-key replica (the reference form, which sits under the batch-join
-    gate via tests/test_stateful.py) is pinned by
-    tests/test_bucketed_stateful.py::test_union_join_bucketed_parity."""
+    """Q8/Q11 JoinUDF: a symmetric hash join by hand on the tagged union
+    (Input1Tagger/Input2Tagger, JoinHelper.java:24-40 — columns ``side``
+    (1 = person, 2 = auction), ``user_id``, ``row_id``, ``ts``). Per
+    user, each (person, auction) pair is emitted exactly once, when its
+    later side arrives; buffers are never evicted, mirroring the
+    reference's never-cleared ListState (NexmarkQuery8.java:634). State
+    is coarsened into hash buckets of user_id — the same per-key-machinery
+    amortization as ``bucketed_stateful`` (r11: one group per key paid
+    ~0.7 ms of Arrow group-call protocol per key per batch — a measured
+    ~1.2 s of pure machinery for 1500 keys at sf0.1 with a trivial fn).
+    The registry entry ``q8_union_join_lowlevel`` runs it under its DuckDB
+    oracle; tests/test_bucketed_stateful.py::test_union_join_bucketed_parity
+    checks the same oracle with several users per bucket."""
     import pickle
 
     def fn(
@@ -574,7 +409,6 @@ def funnel_stateful(
     events: DataFrame,
     flush_ms: int,
     window_us: int,
-    per_key_timers: bool = False,
 ) -> DataFrame:
     """Streaming sequential pattern matcher — the CEP class (Flink's
     `CEP.pattern(A.followedBy(B).followedBy(C).within(T))`, which the
@@ -591,16 +425,15 @@ def funnel_stateful(
     fold is exact regardless of arrival order within it), and keeps the
     rest pending. Matched state is the three timestamps (-1 = unmatched);
     the pending buffer is bounded by the watermark lag times the per-key
-    rate, exactly Flink CEP's sort buffer. Emission is timer-driven:
-    every key registers an event-time timeout at `flush_ms` (a horizon
-    past the bounded input, the analog of Flink's end-of-input watermark
-    flush); when the watermark crosses it, the key folds its remaining
-    buffer, emits its final funnel row once, and drops its state.
+    rate, exactly Flink CEP's sort buffer.
 
-    ``per_key_timers=True`` is the CONTINUOUS deployment shape — the
+    Emission is timer-driven, in the CONTINUOUS deployment shape — the
     reference's timer-per-auction pattern (NexmarkQueryX.java:465): a key
-    with a matched view arms its timer at ``view + window`` instead of
-    the global horizon. When it fires, the key's row is emitted and its
+    with a matched view arms its event-time timer at ``view + window``;
+    a key without one arms it at ``flush_ms`` (a horizon past the bounded
+    input, the analog of Flink's end-of-input watermark flush, where the
+    key folds its remaining buffer, emits once, and drops its state).
+    When a ``view + window`` timer fires, the key's row is emitted and its
     state dropped iff the row is provably immutable under the batch
     semantics: view and click are watermark-finalized minima, and no
     future purchase can land inside ``[click, view + window]`` once the
@@ -618,7 +451,9 @@ def funnel_stateful(
     (Flink CEP's SKIP_PAST_LAST_EVENT would; a production deployment
     choosing that semantics just drops the tombstone). Tombstones are
     removed at the end-of-input horizon. Incremental emission before
-    end-of-input is pinned by tests/test_continuous_cep.py."""
+    end-of-input is pinned by tests/test_continuous_cep.py; bounded
+    replays whose emission timing is unobservable use
+    ``funnel_stateful_bucketed`` (the same ``funnel_fold``)."""
 
     def _fold(v, c, p, us, et):
         return funnel_fold(v, c, p, us, et, window_us)
@@ -650,7 +485,7 @@ def funnel_stateful(
                 state.remove()
                 return
             wm_us = state.getCurrentWatermarkMs() * 1000
-            if per_key_timers and wm_us < flush_ms * 1000:
+            if wm_us < flush_ms * 1000:
                 # per-key horizon fired (watermark passed view + window,
                 # but NOT end-of-input): fold the newly-finalized prefix,
                 # then emit-and-drop iff the row can no longer change
@@ -724,7 +559,7 @@ def funnel_stateful(
                 pend = ~ready
                 buf_us = us[pend].tolist()
                 buf_et = et[pend].tolist()
-        if per_key_timers and v >= 0 and c >= 0 and wm_us > v + window_us:
+        if v >= 0 and c >= 0 and wm_us > v + window_us:
             # the key's row is already immutable (view/click finalized
             # minima, watermark past view + window rules out any future
             # purchase): emit NOW, shrink state to the tombstone.
@@ -739,8 +574,8 @@ def funnel_stateful(
             yield _emit_row(v, c, p)
             return
         state.update((v, c, p, buf_us, buf_et))
-        if per_key_timers and v >= 0:
-            # continuous shape: arm at the key's own immutability horizon
+        if v >= 0:
+            # arm at the key's own immutability horizon
             # (view + window); clickless keys that outlive it re-arm at
             # the global horizon in the timeout branch above
             horizon_ms = (v + window_us) // 1000 + 1
@@ -778,269 +613,6 @@ SCD2_OUTPUT = StructType(
     ]
 )
 
-_SCD2_STATE = StructType(
-    [
-        StructField("cur_state", StringType()),
-        StructField("cur_from", LongType()),
-        StructField("ver", IntegerType()),
-        StructField("buf_us", ArrayType(LongType())),
-        StructField("buf_eid", ArrayType(LongType())),
-        StructField("buf_et", ArrayType(StringType())),
-    ]
-)
-
-
-def scd2_stateful(events: DataFrame, flush_ms: int) -> DataFrame:
-    """Streaming CDC merge — maintain an SCD type-2 dimension from the
-    event changelog as it arrives (the continuous form of the batch
-    `scd2_user_state`): per user, compress no-op updates and emit each
-    closed validity interval the moment its successor's event time is
-    FINALIZED by the watermark; the still-open interval emits at the
-    flush horizon with is_current = true.
-
-    Same watermark discipline as `funnel_stateful`: arriving events
-    buffer in keyed state; each batch folds, in (event-time, event_id)
-    order, only the buffered prefix at-or-below the current watermark —
-    so closed intervals are immutable when emitted (append-mode-sound),
-    exactly how a streaming MERGE must behave to feed a queryable SCD2
-    table incrementally. Pending-buffer size is bounded by watermark
-    lag; durable state is one (state, from, version) triple per key."""
-
-    def fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        uid = int(key[0])
-
-        def fold(cur_state, cur_from, ver, us, eid, et):
-            order = np.lexsort((eid, us))
-            closed = []
-            for i in order:
-                e = et[i]
-                if ver == 0 or e != cur_state:
-                    if ver > 0:
-                        closed.append(
-                            (int(cur_from), int(us[i]), cur_state, int(ver))
-                        )
-                    cur_state, cur_from, ver = e, int(us[i]), ver + 1
-            return cur_state, cur_from, ver, closed
-
-        def emit(closed, final=None):
-            rows = [
-                (uid, f, t, s, v, False) for (f, t, s, v) in closed
-            ]
-            if final is not None:
-                rows.append((uid, final[0], None, final[1], final[2], True))
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "user_id",
-                        "valid_from_us",
-                        "valid_to_us",
-                        "state_value",
-                        "version",
-                        "is_current",
-                    ],
-                )
-
-        if state.hasTimedOut:
-            cur_state, cur_from, ver, buf_us, buf_eid, buf_et = state.get
-            state.remove()
-            closed = []
-            if len(buf_us):  # end-of-input: everything pending is final
-                cur_state, cur_from, ver, closed = fold(
-                    cur_state,
-                    cur_from,
-                    ver,
-                    np.asarray(buf_us, dtype=np.int64),
-                    np.asarray(buf_eid, dtype=np.int64),
-                    list(buf_et),
-                )
-            final = (cur_from, cur_state, ver) if ver > 0 else None
-            yield from emit(closed, final)
-            return
-        if uid < 0:  # flush sentinel: advances the watermark only
-            return
-        if state.exists:
-            cur_state, cur_from, ver, buf_us, buf_eid, buf_et = state.get
-            buf_us, buf_eid, buf_et = (
-                list(buf_us),
-                list(buf_eid),
-                list(buf_et),
-            )
-        else:
-            cur_state, cur_from, ver = "", -1, 0
-            buf_us, buf_eid, buf_et = [], [], []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            buf_us.extend(pdf["us"].astype("int64").tolist())
-            buf_eid.extend(pdf["event_id"].astype("int64").tolist())
-            buf_et.extend(pdf["event_type"].astype(str).tolist())
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        closed = []
-        if buf_us:
-            us = np.asarray(buf_us, dtype=np.int64)
-            eid = np.asarray(buf_eid, dtype=np.int64)
-            et = np.asarray(buf_et, dtype=object)
-            ready = us <= wm_us
-            if ready.any():
-                cur_state, cur_from, ver, closed = fold(
-                    cur_state, cur_from, ver, us[ready], eid[ready], et[ready]
-                )
-                pend = ~ready
-                buf_us = us[pend].tolist()
-                buf_eid = eid[pend].tolist()
-                buf_et = list(et[pend])
-            else:
-                buf_us, buf_eid, buf_et = us.tolist(), eid.tolist(), list(et)
-        state.update((cur_state, cur_from, ver, buf_us, buf_eid, buf_et))
-        state.setTimeoutTimestamp(
-            max(flush_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        yield from emit(closed)
-
-    return (
-        events.withWatermark("ts", "2 seconds")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SCD2_OUTPUT,
-            stateStructType=_SCD2_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-SKIPGRAM_OUTPUT = StructType(
-    [
-        StructField("center", StringType()),
-        StructField("context", StringType()),
-    ]
-)
-
-_SKIPGRAM_STATE = StructType(
-    [
-        StructField("p1", StringType()),
-        StructField("p2", StringType()),
-        StructField("buf_us", ArrayType(LongType())),
-        StructField("buf_eid", ArrayType(LongType())),
-        StructField("buf_et", ArrayType(StringType())),
-    ]
-)
-
-
-def skipgram_stateful(events: DataFrame, flush_ms: int) -> DataFrame:
-    """Streaming training-example generation — emit word2vec-style
-    (center, context) skip-gram pairs (window ±2, symmetric) from
-    per-user event sequences AS THEY ARRIVE: the online counterpart of
-    the batch ``skipgram_pairs`` window pass, for pipelines that mine
-    examples from a live clickstream instead of a nightly batch.
-
-    Same watermark discipline as ``funnel_stateful``: arriving events
-    buffer in keyed state; each batch folds, in (event-time, event_id)
-    order, only the watermark-finalized prefix — each finalized event e
-    emits its four pairs against the two predecessors p1/p2 held in
-    state ((p1,e),(e,p1),(p2,e),(e,p2), exactly the batch lead(1)/
-    lead(2) pairs), then shifts p2←p1, p1←e. Durable state per key is
-    TWO strings regardless of history length; emission is incremental
-    and append-mode-sound (a pair, once its center/context are below
-    the watermark, never changes). The end-of-input flush timer folds
-    the last watermark-lag's worth of pending events."""
-
-    def fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        uid = int(key[0])
-
-        def fold(p1, p2, us, eid, et):
-            order = np.lexsort((eid, us))
-            centers, contexts = [], []
-            for i in order:
-                e = et[i]
-                if p1 is not None:
-                    centers.extend((p1, e))
-                    contexts.extend((e, p1))
-                if p2 is not None:
-                    centers.extend((p2, e))
-                    contexts.extend((e, p2))
-                p2, p1 = p1, e
-            return p1, p2, centers, contexts
-
-        def emit(centers, contexts):
-            if centers:
-                yield pd.DataFrame({"center": centers, "context": contexts})
-
-        if state.hasTimedOut:
-            p1, p2, buf_us, buf_eid, buf_et = state.get
-            state.remove()
-            if len(buf_us):  # end-of-input: everything pending is final
-                _, _, centers, contexts = fold(
-                    p1 or None,
-                    p2 or None,
-                    np.asarray(buf_us, dtype=np.int64),
-                    np.asarray(buf_eid, dtype=np.int64),
-                    list(buf_et),
-                )
-                yield from emit(centers, contexts)
-            return
-        if uid < 0:  # flush sentinel: advances the watermark only
-            return
-        if state.exists:
-            p1, p2, buf_us, buf_eid, buf_et = state.get
-            buf_us, buf_eid, buf_et = list(buf_us), list(buf_eid), list(buf_et)
-        else:
-            p1, p2, buf_us, buf_eid, buf_et = "", "", [], [], []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            buf_us.extend(pdf["us"].astype("int64").tolist())
-            buf_eid.extend(pdf["event_id"].astype("int64").tolist())
-            buf_et.extend(pdf["event_type"].astype(str).tolist())
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        centers, contexts = [], []
-        if buf_us:
-            us = np.asarray(buf_us, dtype=np.int64)
-            eid = np.asarray(buf_eid, dtype=np.int64)
-            et = np.asarray(buf_et, dtype=object)
-            ready = us <= wm_us
-            if ready.any():
-                p1, p2, centers, contexts = fold(
-                    p1 or None, p2 or None, us[ready], eid[ready], et[ready]
-                )
-                pend = ~ready
-                buf_us = us[pend].tolist()
-                buf_eid = eid[pend].tolist()
-                buf_et = list(et[pend])
-            else:
-                buf_us, buf_eid, buf_et = us.tolist(), eid.tolist(), list(et)
-        state.update((p1 or "", p2 or "", buf_us, buf_eid, buf_et))
-        state.setTimeoutTimestamp(
-            max(flush_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        yield from emit(centers, contexts)
-
-    return (
-        events.withWatermark("ts", "2 seconds")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SKIPGRAM_OUTPUT,
-            stateStructType=_SKIPGRAM_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
 
 EWMA_OUTPUT = StructType(
     [
@@ -1051,122 +623,9 @@ EWMA_OUTPUT = StructType(
     ]
 )
 
-_EWMA_STATE = StructType(
-    [
-        StructField("acc", LongType()),
-        StructField("n", LongType()),
-        StructField("last_v", LongType()),
-        StructField("buf_us", ArrayType(LongType())),
-        StructField("buf_eid", ArrayType(LongType())),
-        StructField("buf_v", ArrayType(LongType())),
-    ]
-)
-
-
-def ewma_stateful(events: DataFrame, flush_ms: int) -> DataFrame:
-    """Continuously-maintained quantized EWMA feature — the streaming
-    form of the batch ``user_value_ewma`` fold: per user, the running
-    fixed-point recursion acc = (acc + v_fp) DIV 2 advances as each
-    event is watermark-FINALIZED, exactly the feature-store pattern
-    where a serving-side feature must reflect the stream up to the
-    watermark at all times.
-
-    Same watermark discipline as ``funnel_stateful``/``scd2_stateful``:
-    arriving events buffer in keyed state; each batch folds, in
-    (event-time, event_id) order, only the buffered prefix at-or-below
-    the watermark (an EWMA folded out of order is a different number —
-    the order gate IS the correctness condition). Durable state is
-    three BIGINTs per key plus the watermark-lag pending buffer; the
-    fold is O(ready events). The feature row itself is only emitted at
-    the end-of-input flush timer (append-mode-sound: the full-history
-    EWMA is final only when input ends), which is what lets the replay
-    share the batch oracle verbatim; a serving deployment would swap
-    the sink for a keyed upsert and read the state store directly."""
-
-    def fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        uid = int(key[0])
-
-        def fold(acc, n, last_v, us, eid, v):
-            order = np.lexsort((eid, us))
-            for i in order:
-                x = int(v[i])
-                acc = (acc + x) // 2
-                last_v = x
-                n += 1
-            return acc, n, last_v
-
-        if state.hasTimedOut:
-            acc, n, last_v, buf_us, buf_eid, buf_v = state.get
-            state.remove()
-            if len(buf_us):  # end-of-input: everything pending is final
-                acc, n, last_v = fold(
-                    acc,
-                    n,
-                    last_v,
-                    np.asarray(buf_us, dtype=np.int64),
-                    np.asarray(buf_eid, dtype=np.int64),
-                    np.asarray(buf_v, dtype=np.int64),
-                )
-            if n > 0:
-                yield pd.DataFrame(
-                    [(uid, int(n), int(acc), int(last_v))],
-                    columns=["user_id", "n_events", "ewma_fp", "last_v_fp"],
-                )
-            return
-        if uid < 0:  # flush sentinel: advances the watermark only
-            return
-        if state.exists:
-            acc, n, last_v, buf_us, buf_eid, buf_v = state.get
-            buf_us, buf_eid, buf_v = list(buf_us), list(buf_eid), list(buf_v)
-        else:
-            acc, n, last_v = 0, 0, 0
-            buf_us, buf_eid, buf_v = [], [], []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            buf_us.extend(pdf["us"].astype("int64").tolist())
-            buf_eid.extend(pdf["event_id"].astype("int64").tolist())
-            buf_v.extend(pdf["v_fp"].astype("int64").tolist())
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if buf_us:
-            us = np.asarray(buf_us, dtype=np.int64)
-            eid = np.asarray(buf_eid, dtype=np.int64)
-            v = np.asarray(buf_v, dtype=np.int64)
-            ready = us <= wm_us
-            if ready.any():
-                acc, n, last_v = fold(
-                    acc, n, last_v, us[ready], eid[ready], v[ready]
-                )
-                pend = ~ready
-                buf_us = us[pend].tolist()
-                buf_eid = eid[pend].tolist()
-                buf_v = v[pend].tolist()
-        state.update((acc, n, last_v, buf_us, buf_eid, buf_v))
-        state.setTimeoutTimestamp(
-            max(flush_ms, state.getCurrentWatermarkMs() + 1)
-        )
-
-    return (
-        events.withWatermark("ts", "2 seconds")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=EWMA_OUTPUT,
-            stateStructType=_EWMA_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
 
 # ---------------------------------------------------------------------------
-# Bucketed replay twins — fewer Python group calls for the same semantics
+# Bucketed keyed replays — one Python group call per bucket, not per key
 # ---------------------------------------------------------------------------
 
 _BUCKETED_STATE = StructType([StructField("blob", BinaryType())])
@@ -1184,30 +643,33 @@ def bucketed_stateful(
     batch_reduce=None,
 ) -> DataFrame:
     """Keyed-state replay with state coarsened to ``n_buckets`` hash
-    buckets of user_id — the generic harness behind the bucketed
-    streaming twins (VERDICT r8 task 3: the per-key
-    ``applyInPandasWithState`` replicas pay one Python call + one Arrow
+    buckets of user_id — the generic harness behind the ewma/scd2/
+    funnel/skipgram replays (VERDICT r8 task 3: keying
+    ``applyInPandasWithState`` by user pays one Python call + one Arrow
     group + one state (de)serialization PER KEY PER BATCH — ~2 s of pure
     machinery for 1500 keys at sf0.1, measured with a trivial counter fn
     — while the semantics only need per-USER ordering, which the bucket
     fn preserves internally). This is exactly the state-coarsening that
-    ``transformWithState``'s operator-scoped state would give (probed,
-    protobuf-gated — streaming/tws.py); at real scale ``n_buckets``
-    rides the shuffle-partition count so state per bucket stays
-    users/buckets-bounded. Local default 16 (r11 A/B at sf0.1, 8 state
+    ``transformWithState``'s operator-scoped state would give (that API
+    needs google.protobuf in the Python workers); at real scale
+    ``n_buckets`` rides the shuffle-partition count so state per bucket
+    stays users/buckets-bounded. Local default 16 (r11 A/B at sf0.1, 8 state
     partitions: 64 buckets pay 64 group-call Arrow flushes for no extra
     parallelism — 8/16-bucket runs sit 0.2-0.3 s lower inside a ±0.25 s
     noise band).
 
-    Watermark discipline is IDENTICAL to the per-key replicas: arriving
-    rows buffer in bucket state; each batch folds, in (user, event-time,
-    event_id) order, only the watermark-finalized prefix, via
+    Watermark discipline is the Flink-CEP one ``funnel_stateful``
+    documents: arriving rows buffer in bucket state; each batch folds, in
+    (user, event-time, event_id) order, only the watermark-finalized
+    prefix, via
     ``fold_fn(uid, ustate_or_None, rows) -> (ustate', out_rows)`` called
     once per (user, batch); the end-of-input flush timer folds the
-    pending tail and emits ``final_fn(uid, ustate) -> out_rows``.
-    Per-key parity is pinned by tests/test_bucketed_stateful.py — the
-    bucketed twin must emit the exact row SET of the per-key replica
-    (which itself sits under the batch-oracle hash gate).
+    pending tail and emits ``final_fn(uid, ustate) -> out_rows``. The
+    replay entries built on it (``user_value_ewma_stream_replay``,
+    ``scd2_stream_replay``, ``funnel_conversion_stream_replay``,
+    ``skipgram_pairs_stream_replay``) sit under their DuckDB oracles in
+    tests/test_oracle_parity.py; tests/test_bucketed_stateful.py checks
+    several users per bucket and the multi-batch timer path.
 
     END-OF-INPUT FAST PATH (r11, VERDICT r10 task 1): the flush sentinel
     (user_id < 0 — the bounded-replay analog of Flink's end-of-input
@@ -1230,7 +692,7 @@ def bucketed_stateful(
     emitted rows, the oracle-gated surface, never pass through it.
 
     ``batch_reduce(out_rows) -> out_rows`` (optional) collapses a
-    bucket's emission batch before it crosses Arrow — for twins whose
+    bucket's emission batch before it crosses Arrow — for folds whose
     consumers aggregate anyway (skipgram: 400 K raw pairs per replay
     collapse to <=25 distinct (center, context) counts per bucket), the
     map-side combine that a JVM partial aggregate would do, applied at
@@ -1343,9 +805,16 @@ def bucketed_stateful(
 
 
 def ewma_stateful_bucketed(events: DataFrame, flush_ms: int) -> DataFrame:
-    """Bucketed twin of ``ewma_stateful`` — same fold, same flush-only
-    emission, same output set (pinned per-key-parity + batch oracle);
-    2.3 s vs 3.8 s at sf0.1 (min-of-3 alternating)."""
+    """Continuously-maintained quantized EWMA feature — the streaming
+    form of the batch ``user_value_ewma`` fold: per user, the fixed-point
+    recursion acc = (acc + v_fp) DIV 2 advances as each event is
+    watermark-finalized, in (event-time, event_id) order (an EWMA folded
+    out of order is a different number — the order gate IS the
+    correctness condition). The feature row is emitted only at the
+    end-of-input flush (append-mode-sound: the full-history EWMA is final
+    only when input ends), which lets the replay share the batch oracle
+    verbatim. Bucketed state: 2.3 s vs 3.8 s for one group per user at
+    sf0.1 (min-of-3 alternating)."""
 
     def fold(uid, ustate, rows):
         acc, n, last_v = ustate or (0, 0, 0)
@@ -1366,8 +835,14 @@ def ewma_stateful_bucketed(events: DataFrame, flush_ms: int) -> DataFrame:
 
 
 def scd2_stateful_bucketed(events: DataFrame, flush_ms: int) -> DataFrame:
-    """Bucketed twin of ``scd2_stateful`` — closed intervals emit as the
-    watermark finalizes their successor, the open interval at flush."""
+    """Streaming CDC merge — maintain an SCD type-2 dimension from the
+    event changelog as it arrives (the continuous form of the batch
+    ``scd2_user_state``): per user, compress no-op updates and emit each
+    closed validity interval the moment its successor's event time is
+    finalized by the watermark (immutable when emitted, so append-mode
+    sound); the still-open interval emits at the flush horizon with
+    is_current = true. Incremental emission before end-of-input is pinned
+    by tests/test_continuous_cep.py."""
 
     def fold(uid, ustate, rows):
         cur_state, cur_from, ver = ustate or ("", -1, 0)
@@ -1397,13 +872,13 @@ def scd2_stateful_bucketed(events: DataFrame, flush_ms: int) -> DataFrame:
 def funnel_stateful_bucketed(
     events: DataFrame, flush_ms: int, window_us: int
 ) -> DataFrame:
-    """Bucketed twin of ``funnel_stateful`` — the identical stage-wise
+    """Bucketed form of ``funnel_stateful`` — the identical stage-wise
     masked-min fold (``funnel_fold``, chunking-invariant over the
     watermark-finalized prefixes the harness delivers), one row per user
-    with a matched view, emitted at the flush horizon. The per-key-timer
-    replica remains the CONTINUOUS deployment form (incremental
+    with a matched view, emitted at the flush horizon. ``funnel_stateful``
+    remains the CONTINUOUS deployment form (per-key timers,
     emit-when-provably-immutable, pinned live by
-    tests/test_continuous_cep.py); this twin carries the bounded-replay
+    tests/test_continuous_cep.py); this form carries the bounded-replay
     entry, where emission timing is unobservable and the per-key Python
     group-call machinery was the dominant cost (3.1-3.4 s -> ~2 s at
     sf0.1)."""
@@ -1444,33 +919,6 @@ def funnel_stateful_bucketed(
     )
 
 
-def skipgram_stateful_bucketed(events: DataFrame, flush_ms: int) -> DataFrame:
-    """Bucketed twin of ``skipgram_stateful`` — each finalized event
-    emits its four ±2-window pairs against the per-user p1/p2 history."""
-
-    def fold(uid, ustate, rows):
-        p1, p2 = ustate or (None, None)
-        out = []
-        for r in rows:
-            e = r[3]
-            if p1 is not None:
-                out.append((p1, e))
-                out.append((e, p1))
-            if p2 is not None:
-                out.append((p2, e))
-                out.append((e, p2))
-            p2, p1 = p1, e
-        return (p1, p2), out
-
-    def final(uid, ustate):
-        return []
-
-    return bucketed_stateful(
-        events, flush_ms, ["event_type"], fold, final, SKIPGRAM_OUTPUT,
-        watermark="2 seconds",
-    )
-
-
 SKIPGRAM_COUNT_OUTPUT = StructType(
     [
         StructField("center", StringType()),
@@ -1481,15 +929,22 @@ SKIPGRAM_COUNT_OUTPUT = StructType(
 
 
 def skipgram_stateful_counted(events: DataFrame, flush_ms: int) -> DataFrame:
-    """``skipgram_stateful_bucketed`` with the map-side combine applied at
-    the operator boundary: the event-type vocabulary is tiny, so a
-    bucket's ~25 K raw pairs per replay collapse to <=25 distinct
-    (center, context, cnt) rows before crossing Arrow — exactly the
-    partial aggregation the consumer (a global pair-count) would force
-    the engine to do anyway, done where the data is. Per-batch counts
-    are additive, so the multi-batch timer path stays correct under the
-    consumer's SUM. Count parity with the raw bucketed twin (and through
-    it the per-key replica) is pinned by tests/test_bucketed_stateful.py."""
+    """Streaming training-example generation — word2vec-style (center,
+    context) skip-gram pairs (window ±2, symmetric) from per-user event
+    sequences as they arrive, the online counterpart of the batch
+    ``skipgram_pairs`` window pass: each watermark-finalized event e, in
+    (event-time, event_id) order, pairs with the two predecessors p1/p2
+    held in state ((p1,e),(e,p1),(p2,e),(e,p2), exactly the batch
+    lead(1)/lead(2) pairs), then shifts p2←p1, p1←e.
+
+    The map-side combine is applied at the operator boundary: the
+    event-type vocabulary is tiny, so a bucket's ~25 K raw pairs per
+    replay collapse to <=25 distinct (center, context, cnt) rows before
+    crossing Arrow — exactly the partial aggregation the consumer (a
+    global pair-count) would force the engine to do anyway, done where
+    the data is. Per-batch counts are additive, so the multi-batch timer
+    path stays correct under the consumer's SUM. The registry entry
+    ``skipgram_pairs_stream_replay`` sits under its DuckDB oracle."""
     from collections import Counter
 
     def fold(uid, ustate, rows):

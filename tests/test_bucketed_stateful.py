@@ -1,63 +1,17 @@
-"""Bucketed streaming twins must emit the EXACT row set of their per-key
-replicas (r9, VERDICT r8 task 3): `bucketed_stateful` coarsens keyed
-state into hash buckets to amortize the per-key Python group-call
-machinery, and this suite is what licenses that — the per-key replicas
-are the reference forms (they sit under the batch-oracle hash gate via
-the replay entries' shared oracles), so set-equality here transfers the
-oracle guarantee to the bucketed twins. Run at sf0.001 like the rest of
-CI; the driver re-gates the bucketed entries at sf0.01.
+"""Bucketed keyed-state replays beyond what the registry's oracle gate
+sees: several users sharing one bucket (sf0.001 puts its 15 users in 15
+distinct buckets of the default 16), and the sentinel-less multi-batch
+timer path. The replay entries themselves (ewma, scd2, funnel, skipgram,
+q8 union join) sit under their DuckDB oracles in
+tests/test_oracle_parity.py.
 """
 
-import pytest
-
+from nexmark_vanilla_flink_spark.plans import REGISTRY
 from nexmark_vanilla_flink_spark.plans.linkage import _sentinel_event_stream
 from nexmark_vanilla_flink_spark.streaming.runner import run_available_now
-from nexmark_vanilla_flink_spark.plans.linkage import _FUNNEL_WINDOW_US
-from nexmark_vanilla_flink_spark.streaming.stateful import (
-    ewma_stateful,
-    ewma_stateful_bucketed,
-    funnel_stateful,
-    funnel_stateful_bucketed,
-    scd2_stateful,
-    scd2_stateful_bucketed,
-    skipgram_stateful,
-    skipgram_stateful_bucketed,
-)
+from nexmark_vanilla_flink_spark.streaming.stateful import ewma_stateful_bucketed
 
-PAIRS = {
-    "ewma": (ewma_stateful, ewma_stateful_bucketed, True),
-    "scd2": (scd2_stateful, scd2_stateful_bucketed, False),
-    "skipgram": (skipgram_stateful, skipgram_stateful_bucketed, False),
-    # per-key-TIMER form vs bucketed flush-horizon emission: the row SET
-    # must be identical even though emission timing differs
-    "funnel": (
-        lambda s, f: funnel_stateful(s, f, _FUNNEL_WINDOW_US, per_key_timers=True),
-        lambda s, f: funnel_stateful_bucketed(s, f, _FUNNEL_WINDOW_US),
-        False,
-    ),
-}
-
-
-@pytest.mark.parametrize("name", sorted(PAIRS))
-def test_bucketed_matches_per_key(spark, sf_dir, name):
-    per_key, bucketed, with_value = PAIRS[name]
-    stream, flush_ms = _sentinel_event_stream(
-        spark, sf_dir, with_value=with_value
-    )
-    ref = run_available_now(per_key(stream, flush_ms), output_mode="append")
-    stream2, flush_ms2 = _sentinel_event_stream(
-        spark, sf_dir, with_value=with_value
-    )
-    got = run_available_now(
-        bucketed(stream2, flush_ms2), output_mode="append"
-    )
-    assert [f.name for f in got.schema.fields] == [
-        f.name for f in ref.schema.fields
-    ]
-    a = sorted([tuple(r) for r in got.collect()], key=repr)
-    b = sorted([tuple(r) for r in ref.collect()], key=repr)
-    assert len(a) == len(b) and a == b, f"{name}: {len(a)} vs {len(b)} rows"
-    assert len(a) > 0
+from .oracle_utils import compare
 
 
 def test_bucketed_small_bucket_count(spark, sf_dir):
@@ -167,27 +121,16 @@ def test_multibatch_timer_path(spark, sf_dir, tmp_path):
 
 
 def test_union_join_bucketed_parity(spark, sf_dir):
-    """The bucketed Q8 union join must emit the exact row SET of the
-    per-key replica (which itself matches the batch join —
-    tests/test_stateful.py). n_buckets=3 < key count forces multiple
-    users per bucket, exercising the per-user buffer isolation."""
+    """The bucketed Q8 union join with n_buckets=3 < key count (several
+    users per bucket, exercising the per-user buffer isolation) must
+    equal the batch join oracle of ``q8_union_join_lowlevel``."""
     from pyspark.sql import functions as F
 
-    from nexmark_vanilla_flink_spark.streaming.sources import (
-        stream_events,
-        stream_nexmark,
-    )
+    from nexmark_vanilla_flink_spark.streaming.sources import stream_events
     from nexmark_vanilla_flink_spark.streaming.stateful import (
-        union_join_stateful,
         union_join_stateful_bucketed,
     )
 
-    s = stream_nexmark(spark, sf_dir)
-    ref = run_available_now(
-        union_join_stateful(s["persons"], s["auctions"]),
-        output_mode="append",
-        no_data_batch=False,
-    )
     ev = stream_events(spark, sf_dir)
     tagged = ev.filter(F.col("event_type").isin("signup", "view")).select(
         F.when(F.col("event_type") == "signup", 1)
@@ -203,37 +146,6 @@ def test_union_join_bucketed_parity(spark, sf_dir):
         output_mode="append",
         no_data_batch=False,
     )
-    a = sorted([tuple(r) for r in got.collect()], key=repr)
-    b = sorted([tuple(r) for r in ref.collect()], key=repr)
-    assert len(a) > 0 and a == b
-
-
-def test_skipgram_counted_parity(spark, sf_dir):
-    """The counted twin's (center, context) -> sum(cnt) table must equal
-    the raw bucketed twin's pair counts (which itself is set-parity-pinned
-    against the per-key replica above)."""
-    from collections import Counter
-
-    from nexmark_vanilla_flink_spark.streaming.stateful import (
-        skipgram_stateful_bucketed,
-        skipgram_stateful_counted,
-    )
-
-    stream, flush_ms = _sentinel_event_stream(spark, sf_dir)
-    raw = run_available_now(
-        skipgram_stateful_bucketed(stream, flush_ms),
-        output_mode="append",
-        no_data_batch=False,
-    )
-    ref = Counter((r["center"], r["context"]) for r in raw.collect())
-    stream2, flush_ms2 = _sentinel_event_stream(spark, sf_dir)
-    counted = run_available_now(
-        skipgram_stateful_counted(stream2, flush_ms2),
-        output_mode="append",
-        no_data_batch=False,
-    )
-    got: dict = {}
-    for r in counted.collect():
-        k = (r["center"], r["context"])
-        got[k] = got.get(k, 0) + r["cnt"]
-    assert len(got) > 0 and got == dict(ref)
+    assert got.count() > 0
+    ok, msg = compare(got, sf_dir, REGISTRY["q8_union_join_lowlevel"].oracle)
+    assert ok, msg

@@ -1,7 +1,8 @@
 """Continuous-mode CEP/SCD2 emission (VERDICT r5 task 5): with per-key
-event-time timers (funnel) and per-batch closed-interval emission (SCD2),
-rows must appear in micro-batches BEFORE end-of-input — the deployment
-shape — while the full union stays row-identical to the batch plans."""
+event-time timers (``funnel_stateful``) and per-batch closed-interval
+emission (``scd2_stateful_bucketed``), rows must appear in micro-batches
+BEFORE end-of-input — the deployment shape — while the full union stays
+row-identical to the batch plans."""
 
 import glob
 import os
@@ -19,7 +20,7 @@ from nexmark_vanilla_flink_spark.plans.linkage import (
 from nexmark_vanilla_flink_spark.sources.tables import load_table
 from nexmark_vanilla_flink_spark.streaming.stateful import (
     funnel_stateful,
-    scd2_stateful,
+    scd2_stateful_bucketed,
 )
 
 _SCHEMA = "user_id long, event_type string, us long, event_id long"
@@ -99,7 +100,7 @@ def test_funnel_per_key_timers_emit_before_end_of_input(spark, sf_dir):
         sdf, flush_ms = _sliced_source(spark, sf_dir, d)
         batches = _run_collecting_epochs(
             spark,
-            funnel_stateful(sdf, flush_ms, _FUNNEL_WINDOW_US, per_key_timers=True),
+            funnel_stateful(sdf, flush_ms, _FUNNEL_WINDOW_US),
             "funnel_cont",
         )
     assert batches, "no output at all"
@@ -127,7 +128,7 @@ def test_scd2_closed_intervals_emit_before_end_of_input(spark, sf_dir):
     with tempfile.TemporaryDirectory(prefix="scd2_cont_") as d:
         sdf, flush_ms = _sliced_source(spark, sf_dir, d)
         batches = _run_collecting_epochs(
-            spark, scd2_stateful(sdf, flush_ms), "scd2_cont"
+            spark, scd2_stateful_bucketed(sdf, flush_ms), "scd2_cont"
         )
     assert batches
     epochs = [e for e, _ in batches]

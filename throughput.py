@@ -175,9 +175,11 @@ def main() -> None:
 
         def cep_shape(ev):
             # the CEP data path (funnel_stateful): keyed Python state
-            # machine with watermark buffering — the flush horizon is set
-            # far future so the soak measures the ARRIVAL path (buffer +
-            # finalized-prefix fold), the steady-state cost in production
+            # machine with watermark buffering and per-key timers — the
+            # flush horizon is set far future and the 7-day match window
+            # outlasts the soak, so it measures the ARRIVAL path (buffer +
+            # finalized-prefix fold + timer re-arm), the steady-state
+            # cost in production
             from nexmark_vanilla_flink_spark.streaming.stateful import (
                 funnel_stateful,
             )
